@@ -2032,9 +2032,10 @@ def curate_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composes three proven devices end-to-end: curate_url_dedup's
     deterministic URL synthesis + canonicalization (same host derivation),
     text_gopher_rules' rule battery (shared `_gopher_*` helpers), and
-    quality_classifier_score's model in its narrow Arrow-vectorized
-    inference shape (`qc_logit_arrow` — value-identical to the JVM fold
-    `qc_logit_narrow`, pinned by test).
+    quality_classifier_score's model in its staged Arrow-vectorized
+    inference shape (`qc_narrow_scores` materialized once as a struct
+    column, then `qc_logit_expr` over it — value-identical to the JVM
+    fold `qc_logit_narrow`, pinned by test).
 
     Spark-first shape, 100 TB story: ONE corpus scan carrying THREE
     narrow per-row signals (host parse, rule keep, classifier logit —

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from erlang_mapreduce_spark.streaming.streams import (
@@ -231,3 +232,131 @@ def test_stream_minhash_state_versions_are_deltas(spark, sf_dir, monkeypatch):
         if full_index[(r.band_id, r.bkey)] < r.doc_id
     }
     assert flagged == expect
+
+
+def test_state_partitions_sized_from_keys(spark):
+    """One state-store partition per STATE_KEYS_PER_PARTITION keys, at
+    least 1 (an empty replay still needs a store), at most the cluster's
+    defaultParallelism."""
+    from erlang_mapreduce_spark.streaming.streams import (
+        STATE_KEYS_PER_PARTITION as K,
+        _state_partitions,
+    )
+
+    cap = spark.sparkContext.defaultParallelism
+    assert _state_partitions(spark, 0) == 1
+    assert _state_partitions(spark, 5_000) == 1
+    assert _state_partitions(spark, K) == 1
+    assert _state_partitions(spark, K + 1) == min(2, cap)
+    assert _state_partitions(spark, 3 * K) == min(3, cap)
+    assert _state_partitions(spark, 1000 * K) == cap
+
+
+# (op, replay mode whose row count sizes the store; None = the synthetic
+# python source). The stream-stream join keeps 4 stores per partition
+# (keyToNumValues + keyWithIndexToValue per side).
+_STATEFUL_REPLAYS = [
+    ("stream_watermark_late", "late", 1),
+    ("stream_stateful_dedup", "dup", 1),
+    ("stream_custom_state", "dup", 1),
+    ("stream_stream_join", "plain", 4),
+    ("stream_python_source", None, 1),
+]
+
+
+@pytest.mark.parametrize(
+    "op,mode,stores", _STATEFUL_REPLAYS, ids=[r[0] for r in _STATEFUL_REPLAYS]
+)
+def test_stateful_replay_state_layout(spark, sf_dir, op, mode, stores):
+    """Each stateful replay's checkpoint holds the state-store count sized
+    from its keys — 1 at fixture scale — not a fixed width: every store
+    commits several files per micro-batch."""
+    from erlang_mapreduce_spark.streaming import streams
+
+    n_keys = (
+        streams._PYSTREAM_N
+        if mode is None
+        else streams._materialize_chunks(sf_dir, mode)[1]
+    )
+    want = streams._state_partitions(spark, n_keys)
+    assert want == 1, f"fixture replay of {n_keys} keys sized to {want}"
+    streams.LAST_PROGRESS.pop("__last__", None)
+    getattr(streams, op)(spark, sf_dir)
+    progress = streams.LAST_PROGRESS.get("__last__")
+    assert progress, f"{op} recorded no progress"
+    state_ops = progress[-1]["stateOperators"]
+    assert state_ops, f"{op}: last progress has no state operator"
+    for s in state_ops:
+        assert s["numShufflePartitions"] == want, s
+        assert s["numStateStoreInstances"] == want * stores, s
+
+
+def test_stateful_dedup_restart_resumes_state(spark, sf_dir, tmp_path):
+    """Streaming restart mid-stream: replay chunks 0-2 into a checkpointed
+    parquet sink, then resume from the checkpoint with chunks 3-4 landed
+    under a different session shuffle width. Chunk 4 re-sends chunk 3
+    verbatim, so the sink must end up holding chunks 0-3 exactly — every
+    chunk-4 duplicate suppressed by state carried across the restart — and
+    the resumed query must keep the checkpoint's state-store count (Spark
+    freezes it at the first batch)."""
+    import shutil
+
+    from erlang_mapreduce_spark.streaming import streams
+
+    chunks, _ = streams._materialize_chunks(sf_dir, "dup")
+    src, out = tmp_path / "src", str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    src.mkdir()
+
+    def land(*ids):  # copy2 keeps the mtimes that order the replay
+        for i in ids:
+            name = f"chunk_{i}.parquet"
+            shutil.copy2(f"{chunks}/{name}", src / name)
+
+    def replay(partitions: int) -> list:
+        stream = (
+            spark.readStream.schema(streams._EVENT_SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(src))
+        )
+        with streams._pinned_shuffle(spark, partitions):
+            q = (
+                streams._dedup_replay(stream)
+                .writeStream.trigger(availableNow=True)
+                .format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .start()
+            )
+            q.awaitTermination()
+        streams._record_progress(q)
+        return streams.LAST_PROGRESS["__last__"]
+
+    def sink_rows() -> list:
+        return sorted(tuple(r) for r in spark.read.parquet(out).collect())
+
+    def chunk_rows(*ids) -> list:
+        return sorted(
+            tuple(r)
+            for i in ids
+            for r in spark.read.parquet(f"{chunks}/chunk_{i}.parquet")
+            .select("event_id", "user_id", "event_type")
+            .collect()
+        )
+
+    land(0, 1, 2)
+    replay(1)
+    assert sink_rows() == chunk_rows(0, 1, 2)
+
+    land(3, 4)
+    progress = replay(3)
+    assert sum(p["numInputRows"] for p in progress) == len(
+        chunk_rows(3, 4)
+    ), "resumed run should read exactly chunks 3 and 4"
+    assert sink_rows() == chunk_rows(0, 1, 2, 3), (
+        "chunk-4 duplicates leaked, or state from chunks 0-2 was lost"
+    )
+    for s in progress[-1]["stateOperators"]:
+        assert s["numShufflePartitions"] == 1, s
+        assert s["numStateStoreInstances"] == 1, s
