@@ -238,9 +238,6 @@ def main() -> None:
         ).returncode
 
     spark = get_spark("bench")
-    # each op's jobs carry its name as Spark job group, so the event log
-    # and the UI attribute stages and tasks to the op that ran them
-    sc = spark.sparkContext
     # Warmup: run the headline set once at the smallest SF to trigger JVM
     # class loading + whole-stage codegen for each plan shape, outside the
     # timed region (the baseline likewise excludes its one-time split phase,
@@ -250,14 +247,12 @@ def main() -> None:
         warm_dir = sf_dir
     load(spark, sf_dir, "lineitem").limit(1).count()
     for name in all_ops:
-        sc.setJobGroup(name, name)
         _force(QUERIES[name](spark, warm_dir))
     # One UNTIMED pass at the bench SF: the sf0.001 warmup covers JVM +
     # codegen but leaves the sf0.1 parquet page-cache cold, and the r15
     # run measured pass 0 at ~1.5x steady state from cold reads alone —
     # a systematic bias the median mostly hides but the IQR reports.
     for name in all_ops:
-        sc.setJobGroup(name, name)
         _force(QUERIES[name](spark, sf_dir))
         release_transient_storage()
 
@@ -315,7 +310,6 @@ def main() -> None:
     def _run_pass(ops) -> dict[str, float]:
         row: dict[str, float] = {}
         for name in ops:
-            sc.setJobGroup(name, name)
             t0 = time.perf_counter()
             _force(QUERIES[name](spark, sf_dir))
             row[name] = round(time.perf_counter() - t0, 3)
@@ -417,7 +411,6 @@ def main() -> None:
         release_shared()
         _dedup_mod._DURABLE_SHARED.clear()
         release_transient_storage()
-        sc.setJobGroup(name, name)
         t0 = time.perf_counter()
         _force(QUERIES[name](spark, sf_dir))
         cold = round(time.perf_counter() - t0, 3)

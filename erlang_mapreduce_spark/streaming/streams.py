@@ -151,23 +151,17 @@ _EVENT_SCHEMA = T.StructType(
 )
 
 
-def _materialize_chunks(sf_dir: str, mode: str) -> tuple[str, int]:
+def _materialize_chunks(sf_dir: str, mode: str) -> str:
     """Split events into 4 time-quantile chunks (+ a 5th: replayed/late
     rows). mode='late': chunk 4 re-sends the EARLIEST quartile with shifted
     ids (arrives after the watermark has passed → must be dropped).
     mode='dup': chunk 4 re-sends chunk 3 verbatim (duplicate event_ids
     within the watermark → must be suppressed by stateful dedup).
-    mode='plain': just the 4 in-order chunks — no late/duplicate rows.
-
-    Returns (chunk dir, rows replayed across all chunks); the row count is
-    kept in the .done sentinel so a cached chunk set reports it too."""
+    mode='plain': just the 4 in-order chunks — no late/duplicate rows."""
     d = os.path.join(CHUNK_ROOT, _chunk_ns(sf_dir, "events"), mode)
     sentinel = os.path.join(d, ".done")
-    try:
-        with open(sentinel) as f:
-            return d, int(f.read())
-    except (OSError, ValueError):
-        pass  # absent, or written before the sentinel carried the count
+    if os.path.exists(sentinel):
+        return d
     os.makedirs(d, exist_ok=True)
     con = duckdb.connect()
     src = f"{sf_dir}/events.parquet"
@@ -197,9 +191,6 @@ def _materialize_chunks(sf_dir: str, mode: str) -> tuple[str, int]:
                       FROM ev WHERE q = 4 ORDER BY ts, event_id)
                 TO '{d}/chunk_4.parquet' (FORMAT PARQUET)"""
         )
-    (n_rows,) = con.execute(
-        f"SELECT count(*) FROM '{d}/chunk_*.parquet'"
-    ).fetchone()
     con.close()
     n_chunks = 4 if mode == "plain" else 5
     # strictly increasing mtimes so the file source replays in chunk order
@@ -207,38 +198,30 @@ def _materialize_chunks(sf_dir: str, mode: str) -> tuple[str, int]:
     for i in range(n_chunks):
         os.utime(os.path.join(d, f"chunk_{i}.parquet"), (base + i, base + i))
     with open(sentinel, "w") as f:
-        f.write(str(n_rows))
-    return d, n_rows
+        f.write("ok")
+    return d
 
 
-# Shuffle width of every replay query in this module. A STATEFUL query's
-# shuffle partition count is frozen into its checkpoint at the first
-# micro-batch and becomes the state-store layout: one store per partition
-# per stateful operator, and every store commits files to the checkpoint on
-# every batch — the delta, Hadoop's .crc, Spark's checksum file and its
-# .crc. The cost is per FILE, not per row: without native Hadoop IO each
-# file create forks a `chmod` and each FileContext rename forks a
-# `readlink` (measured on a 4-vCPU box at sf0.01: with 8 stores one
-# stream_stateful_dedup call wrote 196 checkpoint files, 164 of them
-# state files, for ~2.5k keys; with 1 store, 56 and 24). So the store count is sized from the keys the state can hold —
-# one partition per STATE_KEYS_PER_PARTITION keys, at least 1, at most
-# the cluster's defaultParallelism — never from the session's batch
-# shuffle width. A replay's row count bounds its keys, so callers pass
-# it. The semantics are partition-count-independent (every op here is
+# State-store partition count of every STATEFUL replay in this module. A
+# stateful query's shuffle partition count is frozen into its checkpoint at
+# the first micro-batch and becomes the state-store layout: one store per
+# partition per stateful operator, and every store commits files to the
+# checkpoint on every batch — the delta, Hadoop's .crc, Spark's checksum
+# file and its .crc. The cost is per FILE, not per row: without native
+# Hadoop IO each file create forks a `chmod` and each FileContext rename
+# forks a `readlink` (measured on a 4-vCPU box at sf0.01: with 8 stores
+# one stream_stateful_dedup call wrote 196 checkpoint files, 164 of them
+# state files, for ~2.5k keys; with 1 store, 56 and 24). The replay
+# corpora hold at most a few thousand keys, so one store holds them all.
+# Production makes the same explicit first-run choice, sized to keys held
+# per executor and never inherited from the session's batch shuffle
+# width. The semantics are partition-count-independent (every op here is
 # hash-checked against its oracle at any width).
-STATE_KEYS_PER_PARTITION = 1_000_000
+STATE_STORE_PARTITIONS = 1
 
 # The foreachBatch replays hold no state store: their pin only sizes the
 # per-batch jobs, where 8 measured faster than 1 on the fixtures.
 FOREACHBATCH_SHUFFLE_PARTITIONS = 8
-
-
-def _state_partitions(spark: SparkSession, n_keys: int) -> int:
-    """State-store partitions for a stateful replay over ``n_keys`` keys:
-    ceil(n_keys / STATE_KEYS_PER_PARTITION), clamped to
-    [1, defaultParallelism]."""
-    want = -(-n_keys // STATE_KEYS_PER_PARTITION)
-    return max(1, min(want, spark.sparkContext.defaultParallelism))
 
 
 @contextlib.contextmanager
@@ -255,22 +238,16 @@ def _pinned_shuffle(spark: SparkSession, partitions: int):
 
 
 def _run_stream(
-    spark: SparkSession,
-    src_dir: str,
-    n_keys: int,
-    transform,
-    sink_name: str,
-    output_mode: str,
+    spark: SparkSession, src_dir: str, transform, sink_name: str, output_mode: str
 ) -> DataFrame:
-    """availableNow + one-file-per-trigger replay into a memory sink, its
-    state store sized for ``n_keys`` keys."""
+    """availableNow + one-file-per-trigger replay into a memory sink."""
     stream = (
         spark.readStream.schema(_EVENT_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
     ckpt = f"/tmp/spark_graft_ckpt/{sink_name}-{time.time_ns()}"
-    with _pinned_shuffle(spark, _state_partitions(spark, n_keys)):
+    with _pinned_shuffle(spark, STATE_STORE_PARTITIONS):
         q = (
             transform(stream)
             .writeStream.trigger(availableNow=True)
@@ -319,7 +296,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     30 min. The oracle is that batch aggregation with that filter; the
     equality is additionally pinned as a batch-twin test in
     tests/test_streaming.py."""
-    d, n_rows = _materialize_chunks(sf_dir, "late")
+    d = _materialize_chunks(sf_dir, "late")
 
     def agg(stream):
         return (
@@ -335,7 +312,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     sink = f"wm_late_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, d, n_rows, agg, sink, "append")
+    return _run_stream(spark, d, agg, sink, "append")
 
 
 def _dedup_replay(stream: DataFrame) -> DataFrame:
@@ -367,9 +344,9 @@ def stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     row is dropped (in-order replay keeps the watermark behind every
     unseen ts) — the streaming output is therefore exactly the source
     projection."""
-    d, n_rows = _materialize_chunks(sf_dir, "dup")
+    d = _materialize_chunks(sf_dir, "dup")
     sink = f"dedup_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, d, n_rows, _dedup_replay, sink, "append")
+    return _run_stream(spark, d, _dedup_replay, sink, "append")
 
 
 @query(
@@ -435,7 +412,7 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    d, n_rows = _materialize_chunks(sf_dir, "dup")
+    d = _materialize_chunks(sf_dir, "dup")
 
     def update(key, pdfs, state: GroupState):
         import numpy as np
@@ -464,7 +441,7 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     sink = f"custom_state_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, d, n_rows, transform, sink, "update")
+    return _run_stream(spark, d, transform, sink, "update")
 
 
 @query(
@@ -493,7 +470,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed), and its candidate views satisfy view_ts ≥ click_ts − 10 min
     > watermark − 10 min, which is exactly the eviction bound — so the
     availableNow result equals the batch join, row for row."""
-    d, n_rows = _materialize_chunks(sf_dir, "plain")
+    d = _materialize_chunks(sf_dir, "plain")
 
     def side(event_type: str, prefix: str):
         return (
@@ -527,7 +504,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"ssjoin_{abs(hash(sf_dir)) % 10**8}"
     ckpt = f"/tmp/spark_graft_ckpt/{sink}-{time.time_ns()}"
-    with _pinned_shuffle(spark, _state_partitions(spark, n_rows)):
+    # two stateful sides × N batches
+    with _pinned_shuffle(spark, STATE_STORE_PARTITIONS):
         q = (
             joined.writeStream.trigger(availableNow=True)
             .format("memory")
@@ -570,7 +548,7 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline_dataset_export)."""
     from ..exact import _DEC
 
-    d, _ = _materialize_chunks(sf_dir, "plain")
+    d = _materialize_chunks(sf_dir, "plain")
     base = os.path.join(
         "/tmp/spark_graft_file_sink",
         spark.sparkContext.applicationId,
@@ -709,7 +687,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch argmax/count over all events — the oracle. The bounded
     per-user result is materialized and the scratch snapshots deleted
     (the pipeline_dataset_export accounting pattern)."""
-    d, _ = _materialize_chunks(sf_dir, "plain")
+    d = _materialize_chunks(sf_dir, "plain")
     base = os.path.join(
         "/tmp/spark_graft_upsert",
         spark.sparkContext.applicationId,
@@ -804,7 +782,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from any snapshot version."""
     from pyspark.sql import Window
 
-    d, _ = _materialize_chunks(sf_dir, "plain")
+    d = _materialize_chunks(sf_dir, "plain")
     base = os.path.join(
         "/tmp/spark_graft_kmv",
         spark.sparkContext.applicationId,
@@ -1339,7 +1317,8 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"pystream_{abs(hash(sf_dir)) % 10**8}"
     ckpt = f"/tmp/spark_graft_ckpt/{sink}-{_t.time_ns()}"
-    with _pinned_shuffle(spark, _state_partitions(spark, _PYSTREAM_N)):
+    # stateful complete-mode aggregate
+    with _pinned_shuffle(spark, STATE_STORE_PARTITIONS):
         q = (
             agg.writeStream.trigger(availableNow=True)
             .format("memory")

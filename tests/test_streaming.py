@@ -234,52 +234,26 @@ def test_stream_minhash_state_versions_are_deltas(spark, sf_dir, monkeypatch):
     assert flagged == expect
 
 
-def test_state_partitions_sized_from_keys(spark):
-    """One state-store partition per STATE_KEYS_PER_PARTITION keys, at
-    least 1 (an empty replay still needs a store), at most the cluster's
-    defaultParallelism."""
-    from erlang_mapreduce_spark.streaming.streams import (
-        STATE_KEYS_PER_PARTITION as K,
-        _state_partitions,
-    )
-
-    cap = spark.sparkContext.defaultParallelism
-    assert _state_partitions(spark, 0) == 1
-    assert _state_partitions(spark, 5_000) == 1
-    assert _state_partitions(spark, K) == 1
-    assert _state_partitions(spark, K + 1) == min(2, cap)
-    assert _state_partitions(spark, 3 * K) == min(3, cap)
-    assert _state_partitions(spark, 1000 * K) == cap
-
-
-# (op, replay mode whose row count sizes the store; None = the synthetic
-# python source). The stream-stream join keeps 4 stores per partition
+# (op, state stores per shuffle partition). The stream-stream join keeps 4
 # (keyToNumValues + keyWithIndexToValue per side).
 _STATEFUL_REPLAYS = [
-    ("stream_watermark_late", "late", 1),
-    ("stream_stateful_dedup", "dup", 1),
-    ("stream_custom_state", "dup", 1),
-    ("stream_stream_join", "plain", 4),
-    ("stream_python_source", None, 1),
+    ("stream_watermark_late", 1),
+    ("stream_stateful_dedup", 1),
+    ("stream_custom_state", 1),
+    ("stream_stream_join", 4),
+    ("stream_python_source", 1),
 ]
 
 
 @pytest.mark.parametrize(
-    "op,mode,stores", _STATEFUL_REPLAYS, ids=[r[0] for r in _STATEFUL_REPLAYS]
+    "op,stores", _STATEFUL_REPLAYS, ids=[r[0] for r in _STATEFUL_REPLAYS]
 )
-def test_stateful_replay_state_layout(spark, sf_dir, op, mode, stores):
-    """Each stateful replay's checkpoint holds the state-store count sized
-    from its keys — 1 at fixture scale — not a fixed width: every store
+def test_stateful_replay_state_layout(spark, sf_dir, op, stores):
+    """Each stateful replay's checkpoint holds STATE_STORE_PARTITIONS (1)
+    store partitions, not the session's shuffle width: every store
     commits several files per micro-batch."""
     from erlang_mapreduce_spark.streaming import streams
 
-    n_keys = (
-        streams._PYSTREAM_N
-        if mode is None
-        else streams._materialize_chunks(sf_dir, mode)[1]
-    )
-    want = streams._state_partitions(spark, n_keys)
-    assert want == 1, f"fixture replay of {n_keys} keys sized to {want}"
     streams.LAST_PROGRESS.pop("__last__", None)
     getattr(streams, op)(spark, sf_dir)
     progress = streams.LAST_PROGRESS.get("__last__")
@@ -287,8 +261,8 @@ def test_stateful_replay_state_layout(spark, sf_dir, op, mode, stores):
     state_ops = progress[-1]["stateOperators"]
     assert state_ops, f"{op}: last progress has no state operator"
     for s in state_ops:
-        assert s["numShufflePartitions"] == want, s
-        assert s["numStateStoreInstances"] == want * stores, s
+        assert s["numShufflePartitions"] == 1, s
+        assert s["numStateStoreInstances"] == stores, s
 
 
 def test_stateful_dedup_restart_resumes_state(spark, sf_dir, tmp_path):
@@ -303,7 +277,7 @@ def test_stateful_dedup_restart_resumes_state(spark, sf_dir, tmp_path):
 
     from erlang_mapreduce_spark.streaming import streams
 
-    chunks, _ = streams._materialize_chunks(sf_dir, "dup")
+    chunks = streams._materialize_chunks(sf_dir, "dup")
     src, out = tmp_path / "src", str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     src.mkdir()

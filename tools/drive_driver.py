@@ -62,8 +62,6 @@ for name in sorted(qs):
            "spark_rows": None, "oracle_rows": None, "err": None}
     results[name] = rec
     try:
-        # tag the op's jobs (build and collect) with its name in Spark
-        spark.sparkContext.setJobGroup(name, name)
         sdf = qs[name](spark, SF)
         srows = [tuple(r) for r in sdf.collect()]
         canon(sdf.columns, srows)  # driver hashes rows-only ops too
