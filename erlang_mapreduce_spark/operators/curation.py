@@ -1494,10 +1494,13 @@ def qc_logit_narrow(text_col: Column) -> Column:
 # the Arrow boundary (lower+split+filter stay in Spark so no Python
 # unicode-semantics drift can change a hash) and computes per-doc
 # (num, n_feats) in one pass per batch with a module-level word/bigram →
-# weight memo (Zipf makes the md5 cost amortize to dict lookups; the
-# module is importable so reused workers keep the memo across tasks,
-# guide §4.5). The logit divide/round stays a Spark expression, so
-# rounding semantics are Spark's own — bit-identical to the fold (pinned
+# weight memo (Zipf makes the md5 cost amortize to dict lookups). The
+# plain function keeps its own module-level name so cloudpickle ships it
+# BY REFERENCE: workers import this module and reused workers keep the
+# memo across tasks (guide §4.5). Under the UDF wrapper's name it would
+# be pickled by value, dragging along the driver's memo and starting
+# every task with a fresh copy. The logit divide/round stays a Spark
+# expression, so rounding semantics are Spark's own — bit-identical to the fold (pinned
 # by tests/test_operators.py::test_qc_arrow_equals_jvm_fold).
 _QC_SCORES_STRUCT = T.StructType(
     [
@@ -1510,8 +1513,7 @@ _QC_CONTRIB_MEMO: dict[str, int] = {}
 _QC_MEMO_CAP = 2_000_000  # bounds worker memory; misses just re-hash
 
 
-@F.pandas_udf(_QC_SCORES_STRUCT)
-def _qc_scores_arrow(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+def _qc_scores(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     import hashlib
 
     W = _QC_W_TABLE
@@ -1561,7 +1563,9 @@ def _qc_scores_arrow(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
 # quality_classifier_score's plan before this line; the plan pin asserts
 # exactly 1). The function is semantically deterministic — the marker
 # only tells the optimizer not to clone/reorder it.
-_qc_scores_arrow = _qc_scores_arrow.asNondeterministic()
+_qc_scores_arrow = F.pandas_udf(
+    _qc_scores, _QC_SCORES_STRUCT
+).asNondeterministic()
 
 
 def qc_narrow_scores(text_col: Column) -> Column:
@@ -1647,7 +1651,11 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow narrow form runs the same scoring at 0.46 s median AND drops
     both keyed exchanges — at 100 TB the score attaches to each row
     without shuffling the corpus at all, the same posture the capstone
-    and domain filter already used. Docs with zero features (NULL/
+    and domain filter already used. No `scan_parallel` before the UDF:
+    every Arrow-UDF task pays ~0.2 CPU-s of Python worker setup before
+    it reads a row, so on a few-split input a round-robin fan-out to
+    every core costs far more than the scoring it spreads, and at scale
+    the scan already has >= cores splits. Docs with zero features (NULL/
     wordless texts) produce no output row, exactly like the explode
     form (and the oracle's qtf GROUP BY). Cross-engine exactness: tf
     (via per-feature contributions) and weights are
@@ -1658,8 +1666,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no reference counterpart); included per the LLM-pipeline brief."""
     d = load(spark, sf_dir, "documents")
     scored = (
-        scan_parallel(d)
-        .select("doc_id", qc_narrow_scores(F.col("text")).alias("s"))
+        d.select("doc_id", qc_narrow_scores(F.col("text")).alias("s"))
         .select(
             "doc_id",
             F.col("s.num").alias("num"),

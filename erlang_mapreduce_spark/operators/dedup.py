@@ -758,14 +758,24 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shuffle budget — 3 exchanges, every one O(docs) or O(candidates),
     never O(grams): the band self-join keyed on (band_id, band_hash), the
     candidate distinct, and the verify join of candidate pairs back to
-    the gram-set table (gram sets AND signatures are narrow). Gram sets are built narrowly
+    the gram-set table (gram sets AND signatures are narrow). The
+    self-join is hinted to a shuffled hash join at every size: its two
+    sides are the same exchange, so adaptive execution runs it once and
+    reuses it, and the signature UDF evaluates ONCE per doc. Planned as a
+    broadcast join on a small corpus, the build side and the streamed
+    side would each evaluate the UDF (pinned in tests/test_plans.py).
+    Grouping bands into buckets instead also evaluates it once, but its
+    ObjectHashAggregate adds 9 generated classes to the plan — enough to
+    overflow Spark's 100-entry codegen cache on the curation pipeline and
+    recompile ~21 classes per pass. Gram sets are built narrowly
     (_doc_gram_sets), and Jaccard verification is a per-row
     `array_intersect` — no groupBy, no sizes table, no second pass over
     grams. The gram-set table feeds three consumers (bands + verify ×2);
-    `_materialize` computes it once — pooled persist() by default (blocks
-    freed at the next invocation, recomputable on executor loss), or a
-    durable parquet snapshot under $SPARK_GRAFT_CHECKPOINT_DIR, the
-    100 TB posture for a corpus-scale gram-set table.
+    `_shared_materialize` computes it once per (session, corpus) — an
+    LRU-bounded `shared_local_checkpoint` by default (shared with the
+    other dedup ops), or a durable parquet snapshot under
+    $SPARK_GRAFT_CHECKPOINT_DIR, the 100 TB posture for a corpus-scale
+    gram-set table.
 
     Like dedup_ngram_jaccard, verbatim-duplicate groups collapse to one
     representative before signing and expand after: identical texts have
@@ -778,7 +788,8 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_sets = _shared_gram_sets_md5(spark, sf_dir)
     bands = minhash_bands(doc_sets)
     a = bands.alias("a")
-    b = bands.alias("b")
+    # shuffle, not broadcast: see the shuffle budget above
+    b = bands.alias("b").hint("shuffle_hash")
     cands = (
         a.join(
             b,

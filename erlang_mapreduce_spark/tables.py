@@ -50,8 +50,15 @@ def scan_parallel(df: DataFrame) -> DataFrame:
     dominated by post-scan fan-out (explode to n-grams, per-vector math,
     media decode), where one input split would otherwise serialize the whole
     pipeline onto one task. At scale the scan already has >= cores partitions
-    and this is a no-op, so the extra shuffle is paid exactly when it's
-    cheap (input small) and never when it's expensive.
+    and this is a no-op, so the extra shuffle is paid only when the input
+    is small — where the shuffle itself is cheap, but NOT every downstream
+    cost is: each task of a following Python/Arrow UDF pays ~0.2 CPU-s of
+    worker setup (PySpark 4.1's per-task `setup_spark_files` →
+    `importlib.invalidate_caches()`) before it reads a row, so fanning a
+    few milliseconds of UDF work out to every core multiplies that fixed
+    cost by the core count. Don't put this in front of a cheap UDF
+    (quality_classifier_score measured 4 Python tasks for 20 ms of
+    scoring at sf0.01).
 
     The split count is ESTIMATED from the leaf files' sizes with the same
     arithmetic Spark's file-split planning uses (maxPartitionBytes +

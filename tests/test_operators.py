@@ -1139,3 +1139,19 @@ def test_qc_arrow_equals_jvm_fold(spark, sf_dir):
         # size(NULL) is -1 in non-ANSI Spark; the Arrow scorer reports NULL
         exp_nf = None if r.jvm_nf == -1 else r.jvm_nf
         assert r.arrow_nf == exp_nf, r
+
+
+def test_qc_scorer_pickles_by_reference():
+    """The Arrow scorer's function ships to workers BY REFERENCE, so a
+    reused worker imports the module once and keeps its word → weight
+    memo across tasks. Pickled by value, it would carry a copy of the
+    driver's memo and weight table, and every task would start cold."""
+    import pickle
+
+    from pyspark import cloudpickle
+
+    from erlang_mapreduce_spark.operators import curation
+
+    f = curation._qc_scores_arrow.func
+    assert f is curation._qc_scores
+    assert pickle.loads(cloudpickle.dumps(f)) is f

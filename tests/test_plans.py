@@ -605,10 +605,12 @@ def test_domain_filter_single_scan_single_agg(spark, sf_dir):
 
 def test_quality_classifier_narrow_zero_exchange(spark, sf_dir):
     """quality_classifier_score must be ONE corpus scan carrying the
-    Arrow-vectorized narrow scorer — zero joins, zero keyed exchanges,
-    zero windows, one ArrowEvalPython, no row-at-a-time Python (r17
-    rewrite of the explode → 2 hash aggs → broadcast-join plan; guide
-    §4.2, r16 VERDICT task 3)."""
+    Arrow-vectorized narrow scorer — zero joins, zero exchanges (keyed
+    OR round-robin: a fan-out repartition before the UDF turns a few
+    splits of scoring into one Python task per core, each paying the
+    worker's fixed setup), zero windows, one ArrowEvalPython, no
+    row-at-a-time Python (r17 rewrite of the explode → 2 hash aggs →
+    broadcast-join plan; guide §4.2, r16 VERDICT task 3)."""
     df = QUERIES["quality_classifier_score"](spark, sf_dir)
     p = plan_of(df)
     assert count_nodes(p, "Scan parquet") == 1, p
@@ -616,4 +618,18 @@ def test_quality_classifier_narrow_zero_exchange(spark, sf_dir):
     assert "BatchEvalPython" not in p, p
     assert count_nodes(p, "ArrowEvalPython") == 1, p
     assert count_nodes(p, "Window") == 0
-    assert p.count("hashpartitioning(") == 0, p
+    assert count_nodes(p, "Exchange") == 0, p
+
+
+def test_dedup_minhash_signs_once(spark, sf_dir):
+    """dedup_minhash evaluates the signature UDF ONCE: the band self-join
+    runs as a shuffled hash join whose two sides are one exchange, reused
+    at run time. Planned as a broadcast join, the build side and the
+    streamed side would each carry their own ArrowEvalPython."""
+    df = QUERIES["dedup_minhash"](spark, sf_dir)
+    df.collect()  # runs df's own adaptive plan to its final form
+    tree = plan_of(df).split("\n\n")[0]
+    final = tree.split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in final, tree
+    assert final.count("ArrowEvalPython (") == 1, final
+    assert "ReusedExchange (" in final, final
