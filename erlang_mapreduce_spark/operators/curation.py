@@ -1500,8 +1500,8 @@ def qc_logit_narrow(text_col: Column) -> Column:
 # memo across tasks (guide §4.5). Under the UDF wrapper's name it would
 # be pickled by value, dragging along the driver's memo and starting
 # every task with a fresh copy. The logit divide/round stays a Spark
-# expression, so rounding semantics are Spark's own — bit-identical to the fold (pinned
-# by tests/test_operators.py::test_qc_arrow_equals_jvm_fold).
+# expression, so rounding semantics are Spark's own — bit-identical to
+# the fold (pinned by tests/test_operators.py::test_qc_arrow_equals_jvm_fold).
 _QC_SCORES_STRUCT = T.StructType(
     [
         T.StructField("num", T.LongType()),
