@@ -11,6 +11,13 @@ session factory whose defaults are chosen for scale-out behavior:
   on a real cluster this is overridden or left to AQE's coalescing).
 - UTC session timezone so timestamp semantics are stable across engines.
 - Arrow enabled for any pandas-UDF path (the only sanctioned Python hot path).
+- Local mode only: streaming checkpoints go through Spark's
+  FileSystem-based checkpoint manager. The FileContext default stats
+  every rename target's link status, which Hadoop's local FS answers by
+  forking `readlink` when native Hadoop IO is absent — hundreds of forks
+  per stateful replay. A local `rename(2)` is atomic and every replay
+  owns a fresh checkpoint dir, so the FileContext's no-overwrite rename
+  buys nothing here; a cluster master keeps the default (HDFS needs it).
 """
 
 from __future__ import annotations
@@ -132,6 +139,12 @@ def get_spark(app_name: str = "erlang-mapreduce-spark") -> SparkSession:
             except (ValueError, OSError):
                 mem = "4g"
         builder = builder.config("spark.driver.memory", mem)
+        # see the module docstring: no `readlink` fork per checkpoint rename
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

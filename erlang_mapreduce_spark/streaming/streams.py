@@ -208,10 +208,12 @@ def _materialize_chunks(sf_dir: str, mode: str) -> str:
 # partition per stateful operator, and every store commits files to the
 # checkpoint on every batch — the delta, Hadoop's .crc, Spark's checksum
 # file and its .crc. The cost is per FILE, not per row: without native
-# Hadoop IO each file create forks a `chmod` and each FileContext rename
-# forks a `readlink` (measured on a 4-vCPU box at sf0.01: with 8 stores
-# one stream_stateful_dedup call wrote 196 checkpoint files, 164 of them
-# state files, for ~2.5k keys; with 1 store, 56 and 24). The replay
+# Hadoop IO each file create forks a `chmod`. Renames fork nothing in
+# local mode, which uses the FileSystem-based checkpoint manager
+# (session.py); Spark's FileContext default forks a `readlink` per rename.
+# Measured on a 4-vCPU box at sf0.01: with 8 stores one
+# stream_stateful_dedup call wrote 196 checkpoint files, 164 of them
+# state files, for ~2.5k keys; with 1 store, 56 and 24. The replay
 # corpora hold at most a few thousand keys, so one store holds them all.
 # Production makes the same explicit first-run choice, sized to keys held
 # per executor and never inherited from the session's batch shuffle
@@ -237,31 +239,37 @@ def _pinned_shuffle(spark: SparkSession, partitions: int):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _run_stream(
-    spark: SparkSession, src_dir: str, transform, sink_name: str, output_mode: str
-) -> DataFrame:
-    """availableNow + one-file-per-trigger replay into a memory sink."""
-    stream = (
+def _replay_source(spark: SparkSession, src_dir: str) -> DataFrame:
+    """The chunk replay as a stream: one parquet chunk per micro-batch."""
+    return (
         spark.readStream.schema(_EVENT_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
+
+
+def _replay_to_memory(
+    spark: SparkSession, stream: DataFrame, sink_name: str, output_mode: str
+) -> DataFrame:
+    """Drain a built streaming DataFrame (availableNow) into a memory sink
+    under STATE_STORE_PARTITIONS. The memory sink holds the results, so the
+    per-run checkpoint dir is dead weight once the query ends — removed
+    whether the query succeeds or raises, so failures don't accumulate."""
     ckpt = f"/tmp/spark_graft_ckpt/{sink_name}-{time.time_ns()}"
-    with _pinned_shuffle(spark, STATE_STORE_PARTITIONS):
-        q = (
-            transform(stream)
-            .writeStream.trigger(availableNow=True)
-            .format("memory")
-            .queryName(sink_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    _record_progress(q)
-    # the memory sink holds the results; the per-run state-store dir is
-    # dead weight once the query terminates — don't accumulate across runs
-    shutil.rmtree(ckpt, ignore_errors=True)
+    try:
+        with _pinned_shuffle(spark, STATE_STORE_PARTITIONS):
+            q = (
+                stream.writeStream.trigger(availableNow=True)
+                .format("memory")
+                .queryName(sink_name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            q.awaitTermination()
+        _record_progress(q)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(sink_name)
 
 
@@ -312,7 +320,9 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     sink = f"wm_late_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, d, agg, sink, "append")
+    return _replay_to_memory(
+        spark, agg(_replay_source(spark, d)), sink, "append"
+    )
 
 
 def _dedup_replay(stream: DataFrame) -> DataFrame:
@@ -346,7 +356,9 @@ def stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection."""
     d = _materialize_chunks(sf_dir, "dup")
     sink = f"dedup_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, d, _dedup_replay, sink, "append")
+    return _replay_to_memory(
+        spark, _dedup_replay(_replay_source(spark, d)), sink, "append"
+    )
 
 
 @query(
@@ -441,7 +453,9 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     sink = f"custom_state_{abs(hash(sf_dir)) % 10**8}"
-    return _run_stream(spark, d, transform, sink, "update")
+    return _replay_to_memory(
+        spark, transform(_replay_source(spark, d)), sink, "update"
+    )
 
 
 @query(
@@ -474,9 +488,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def side(event_type: str, prefix: str):
         return (
-            spark.readStream.schema(_EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(d)
+            _replay_source(spark, d)
             .filter(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -503,21 +515,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
     )
     sink = f"ssjoin_{abs(hash(sf_dir)) % 10**8}"
-    ckpt = f"/tmp/spark_graft_ckpt/{sink}-{time.time_ns()}"
     # two stateful sides × N batches
-    with _pinned_shuffle(spark, STATE_STORE_PARTITIONS):
-        q = (
-            joined.writeStream.trigger(availableNow=True)
-            .format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    _record_progress(q)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink)
+    return _replay_to_memory(spark, joined, sink, "append")
 
 
 @query(
@@ -555,11 +554,7 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{os.path.basename(os.path.normpath(sf_dir))}-{time.time_ns()}",
     )
     out, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
-    stream = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
+    stream = _replay_source(spark, d)
     try:
         q = (
             stream.writeStream.trigger(availableNow=True)
@@ -698,11 +693,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         _upsert_merge_batch(spark, base, versions, batch_df, batch_id)
 
-    stream = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
+    stream = _replay_source(spark, d)
     ckpt = os.path.join(base, "ckpt")
     try:
         with _pinned_shuffle(spark, FOREACHBATCH_SHUFFLE_PARTITIONS):
@@ -834,11 +825,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta.write.mode("overwrite").parquet(v)
         versions[batch_id] = v
 
-    stream = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
+    stream = _replay_source(spark, d)
     ckpt = os.path.join(base, "ckpt")
     try:
         with _pinned_shuffle(spark, FOREACHBATCH_SHUFFLE_PARTITIONS):
@@ -1301,8 +1288,6 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism is the partitions() fan-out; python-worker marshalling is
     the slow path, so a bulk connector emits Arrow batches or lands
     parquet instead (scan_python_datasource's note)."""
-    import time as _t
-
     _register_synth_stream(spark)
     agg = (
         spark.readStream.format("synthstream")
@@ -1316,18 +1301,5 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"pystream_{abs(hash(sf_dir)) % 10**8}"
-    ckpt = f"/tmp/spark_graft_ckpt/{sink}-{_t.time_ns()}"
     # stateful complete-mode aggregate
-    with _pinned_shuffle(spark, STATE_STORE_PARTITIONS):
-        q = (
-            agg.writeStream.trigger(availableNow=True)
-            .format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    _record_progress(q)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink)
+    return _replay_to_memory(spark, agg, sink, "complete")

@@ -304,6 +304,10 @@ def test_stateful_dedup_restart_resumes_state(spark, sf_dir, tmp_path):
                 .start()
             )
             q.awaitTermination()
+        manager = q._jsq.streamingQuery().offsetLog().fileManager()
+        assert manager.getClass().getName().endswith(
+            "FileSystemBasedCheckpointFileManager"
+        ), "local mode should checkpoint through the FileSystem manager"
         streams._record_progress(q)
         return streams.LAST_PROGRESS["__last__"]
 
@@ -334,3 +338,35 @@ def test_stateful_dedup_restart_resumes_state(spark, sf_dir, tmp_path):
     for s in progress[-1]["stateOperators"]:
         assert s["numShufflePartitions"] == 1, s
         assert s["numStateStoreInstances"] == 1, s
+
+
+def test_failed_replay_removes_its_checkpoint(spark, sf_dir, monkeypatch):
+    """A memory-sink replay whose query fails mid-stream raises to the
+    caller and still removes its per-run checkpoint dir."""
+    import os
+
+    from erlang_mapreduce_spark.streaming import streams
+
+    root = "/tmp/spark_graft_ckpt"
+
+    def dedup_ckpts() -> set:
+        if not os.path.isdir(root):
+            return set()
+        return {e for e in os.listdir(root) if e.startswith("dedup_")}
+
+    def raising(stream):
+        return stream.select(
+            "event_id",
+            F.when(
+                F.col("event_id").isNotNull(),
+                F.raise_error(F.lit("replay boom")),
+            )
+            .cast("string")
+            .alias("boom"),
+        )
+
+    monkeypatch.setattr(streams, "_dedup_replay", raising)
+    before = dedup_ckpts()
+    with pytest.raises(Exception, match="replay boom"):
+        streams.stream_stateful_dedup(spark, sf_dir)
+    assert dedup_ckpts() <= before, "failed replay leaked its checkpoint"

@@ -135,7 +135,8 @@ def main() -> None:
         "query, fixed-per-batch (driver planning/WAL ~100-200 ms + state-store",
         "commits, whose cost is per checkpoint FILE — each store writes ~4",
         "files a batch, and without native Hadoop IO every file create forks",
-        "`chmod` and every rename forks `readlink`) dominates exec",
+        "`chmod`; local mode renames through the FileSystem-based checkpoint",
+        "manager, which forks nothing) dominates exec",
         "because sf0.1 batches are tiny; stream_minhash_dedup is the",
         "exception — its exec is real banding/join/state-version work",
         "(data-proportional, the foreachBatch pipeline), with fixed <4%.",
